@@ -9,11 +9,30 @@ and ad-hoc iteration (`explain(df)` while developing an operator).
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import DataFrame
 
 
 def formatted_plan(df: DataFrame) -> str:
     return df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
+
+
+def parquet_scans(df: DataFrame) -> int:
+    """Parquet scans the query pays, seen through checkpoints: the
+    `Scan parquet` nodes of the executed plan plus the distinct
+    FileScanRDDs in the lineage of its RDD-scan leaves (a
+    localCheckpoint reads as `Scan ExistingRDD`, so its lineage is
+    invisible in the plan string). Call before `df` runs: a materialized
+    checkpoint truncates its lineage."""
+    plan = df._jdf.queryExecution().executedPlan()
+    leaves = plan.collectLeaves()
+    rdd_scans: set[str] = set()
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        if leaf.getClass().getSimpleName() == "RDDScanExec":
+            rdd_scans |= set(re.findall(r"FileScanRDD\[(\d+)\]", leaf.rdd().toDebugString()))
+    return plan.toString().count("Scan parquet") + len(rdd_scans)
 
 
 def has_pushed_filter(df: DataFrame, fragment: str) -> bool:

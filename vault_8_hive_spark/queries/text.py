@@ -324,25 +324,15 @@ def text_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Repartition before the CPU-heavy hashing: a single parquet file is
     # one input split, which would serialize all md5 work into one task.
     par = spark.sparkContext.defaultParallelism
-    # The repartition exchange IS the shared materialization point: every
-    # consumer below (band side, b2 side, both verification rehydration
-    # sides) contains the identical exchange subtree, so the planner
-    # collapses them into ONE shuffle write + ReusedExchange reads
-    # (asserted in tests/test_plans.py). Shuffle files hold the shingled
-    # docs exactly once — the plan-cacheable handoff a localCheckpoint
-    # used to provide, without driver-pinned blocks leaking across runs.
-    # Explicit isnotnull(doc_id) BELOW the shared exchange (a no-op:
-    # every output row flows through inner joins on doc_id): the self-
-    # join INFERS this constraint onto the rehydration sides, but the
-    # inference cannot push through the df-cap's count-window on the
-    # band side (doc_id is not the window partition key) — without the
-    # explicit filter the two subtrees differ by that one Filter and the
-    # planner stops collapsing them into ReusedExchange (= a second
-    # corpus scan+shingle pass; found by tests/test_plans.py's scan cap).
+    # The shingled docs are the shared materialization point: a lazy
+    # localCheckpoint partitioned on doc_id, so the corpus is scanned and
+    # shingled exactly once — the band checkpoint (_cap_banded) and both
+    # verification rehydration sides all read these blocks (asserted in
+    # tests/test_plans.py through the checkpoint lineages).
     sh = (
         _shingled(table(spark, sf_dir, "documents"))
-        .where(F.col("doc_id").isNotNull())
         .repartition(par, "doc_id")
+        .localCheckpoint(eager=False)
     )
     bands = _minhash_bands(sh)
     # df-cap on bucket size (auto, see _cap_banded): the helper's

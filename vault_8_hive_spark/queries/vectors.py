@@ -67,17 +67,22 @@ _O_SQN = (
 _O_EMB_NZ = f"(SELECT * FROM embeddings WHERE ({_O_SQN}) > 0 AND isfinite({_O_SQN}))"
 
 
+def _finite_dom() -> F.Column:
+    """The predicate behind _finite, for building an expression TOTAL on
+    that domain (`when(_finite_dom(), expr)`, SCALE.md "filters are not
+    guards") where the row filter alone cannot protect it."""
+    from ..operators.similarity import sq_norm
+
+    n = sq_norm(to_double("embedding"))
+    return F.col("embedding").isNotNull() & (n != F.lit(float("inf"))) & ~F.isnan(n)
+
+
 def _finite(emb: DataFrame) -> DataFrame:
     """embeddings that are PRESENT with a finite squared norm — the
     distance-computation domain (kmeans/PQ/drift): a NaN component or an
     overflowing magnitude poisons every distance, identically nulled in
     the oracles. Zero/denormal vectors stay (distances remain finite)."""
-    from ..operators.similarity import sq_norm
-
-    n = sq_norm(to_double("embedding"))
-    return emb.where(
-        F.col("embedding").isNotNull() & (n != F.lit(float("inf"))) & ~F.isnan(n)
-    )
+    return emb.where(_finite_dom())
 
 
 def _nz(emb: DataFrame) -> DataFrame:
@@ -380,18 +385,12 @@ def vec_cosine_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     Zero-norm rows excluded on both engines (_nz)."""
     prep(spark)
     emb = _nz(table(spark, sf_dir, "embeddings"))
-    # Repartition after the signature projection: one exchange feeds both
-    # self-join sides via ReusedExchange, so the hyperplane signatures
-    # compute once (no localCheckpoint needed).
-    # The exchange carries the NARROW (vec_id, embedding) row and the
-    # signature is computed ABOVE it (the minhash-shape layout): every
-    # consumer — both self-join sides AND the df-cap audit branch —
-    # then needs the identical columns below the exchange, so the
-    # column pruner cannot split them into two differently-projected
-    # exchanges (which costs a second scan; found by the plan test when
-    # the audit branch pruned `embedding` away). The signature fold is
-    # re-evaluated once in the audit branch — a linear map-side pass,
-    # cheap next to a duplicated scan.
+    # The signatures are computed once: _cap_banded repartitions `sigs`
+    # on bucket and lazily localCheckpoints it, and both self-join sides
+    # and the df-cap audit read those blocks, so the corpus is scanned
+    # once (asserted in tests/test_plans.py through the checkpoint
+    # lineage). The vec_id repartition spreads the signature work over
+    # every task: one parquet file is one input split (as in text_minhash_lsh).
     base = (
         emb.where(F.col("vec_id").isNotNull())
         .select("vec_id", "embedding")
@@ -1813,6 +1812,10 @@ def vec_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
     drift bet the Spark<->DuckDB pair already made (~1e-14 relative
     reduction-order drift, absorbed).
 
+    Totality: the x6 grid is built only on _finite's finite-norm domain
+    (NULL elsewhere), because floor(double) saturates without raising and
+    a row filter does not guard the centering (SCALE.md "ANSI totality").
+
     Exactness: x6 and the per-dim mean are deterministic integer grids;
     Gram cells are exact int64 (|y| <= ~4e6, 5e3 vectors -> |G| <= 8e16
     < 2^63; int->double conversion is correctly rounded in both
@@ -1837,7 +1840,7 @@ def vec_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
             "long"
         ),
     )
-    vecs = emb.select("vec_id", x6arr.alias("x6arr"))
+    vecs = emb.select("vec_id", F.when(_finite_dom(), x6arr).alias("x6arr"))
     dims = vecs.select(
         "vec_id", F.posexplode("x6arr").alias("d0", "x6")
     ).select("vec_id", (F.col("d0") + 1).alias("d"), "x6")

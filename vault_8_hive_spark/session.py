@@ -21,6 +21,18 @@ def _cpus() -> int:
     return os.cpu_count() or 8
 
 
+def _driver_mem() -> str:
+    """Local-mode JVM heap: $SPARK_GRAFT_DRIVER_MEM, else half the
+    machine's physical memory, at most 24g. A heap cap above physical
+    memory lets the JVM grow its heap instead of collecting until the
+    kernel OOM-kills it (seen mid-suite on a 15 GB box under 24g)."""
+    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if env:
+        return env
+    phys_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    return f"{min(24 * 1024, phys_mb // 2)}m"
+
+
 def get_spark(app_name: str = "vault-8-hive-spark", cpus: int | None = None) -> SparkSession:
     """Build (or reuse) the engine's SparkSession.
 
@@ -45,7 +57,7 @@ def get_spark(app_name: str = "vault-8-hive-spark", cpus: int | None = None) -> 
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory", _driver_mem())
         # UI off for bench hygiene; SPARK_GRAFT_UI=1 turns it on for the
         # stage-timing probe (tools/stage_probe.py reads the REST API).
         .config("spark.ui.enabled",
