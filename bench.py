@@ -4,11 +4,11 @@
 Prints ONE JSON line:
   {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 
-Each query is timed over a FRESH DataFrame per run (every scan/map/
-shuffle stage re-executes — see vault_8_hive_spark/benchlib.py for why
-re-executing a prepared DataFrame would measure cached-shuffle serving
-instead). The headline `queries` numbers are execution time; Catalyst
-compile time is measured in the same runs and reported under `compile`.
+Each query is timed end to end over a FRESH DataFrame per run: Python
+plan build, Catalyst compile, execution and Arrow egress, with every
+scan/map/shuffle stage re-executed (see vault_8_hive_spark/benchlib.py
+for why re-executing a prepared DataFrame would measure cached-shuffle
+serving instead). The artifact is stamped `"timing": "end_to_end"`.
 Results are materialized via toPandas (Arrow egress — the production path
 for bulk result transfer; row-object collect() is 2-3x slower for wide
 results and measures Python object construction, not the engine). A
@@ -26,6 +26,28 @@ import time
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent))
+
+
+def _prev_total(root: Path, cpus: int) -> float | None:
+    """Total of the newest committed BENCH_r{N}.json recorded on the same
+    core count with the same end-to-end timing, so a reader of this JSON
+    alone sees whether the bench set got faster or slower. Artifacts of
+    another core count, and the exec-only artifacts made before the
+    timing stamp, do not compare and are skipped; no match gives None."""
+
+    def round_no(path: Path) -> tuple[int, str]:
+        m = re.match(r"BENCH_r(\d+)", path.name)
+        return (int(m.group(1)) if m else -1, path.name)
+
+    for path in sorted(root.glob("BENCH_r[0-9]*.json"), key=round_no, reverse=True):
+        try:
+            prev = json.loads(path.read_text())
+            prev = prev.get("parsed") or prev
+            if prev.get("cpus") == cpus and prev.get("timing") == "end_to_end":
+                return prev.get("value")
+        except (OSError, ValueError, AttributeError):
+            continue
+    return None
 
 
 def main() -> None:
@@ -73,7 +95,6 @@ def main() -> None:
     from vault_8_hive_spark.benchlib import time_query
 
     per: dict[str, float] = {}
-    compile_s: dict[str, float] = {}
     for name, q in bench_set.items():
         gc.collect()
         # JVM-side GC outside the timed window: accumulated broadcast/UDF
@@ -90,9 +111,7 @@ def main() -> None:
         # (measured: up to 4x inflation on the query following the
         # heaviest one).
         time.sleep(0.5)
-        e, c = time_query(spark, q, sf_dir, runs=5)
-        per[name] = round(e, 4)
-        compile_s[name] = round(c, 4)
+        per[name] = round(time_query(spark, q, sf_dir, runs=5), 4)
 
     total = round(sum(per.values()), 4)
 
@@ -124,27 +143,14 @@ def main() -> None:
     ratio = {n: round(per[n] / duck[n], 2) for n in duck if duck[n] > 0}
     duck_total = round(sum(duck.values()), 4)
 
-    # Cross-round drift, self-evident in the artifact: the newest
-    # committed BENCH_r{N}.json provides the previous total, so a reader
-    # of this JSON alone sees whether the bench set got faster or slower
-    # than last round (reseed noise vs plan drift is then a BASELINE.md
-    # question, not an artifact-archaeology one).
-    prev_total = None
-    here = Path(__file__).resolve().parent
-    prev_files = sorted(here.glob("BENCH_r[0-9]*.json"))
-    if prev_files:
-        try:
-            prev = json.loads(prev_files[-1].read_text())
-            prev_total = (prev.get("parsed") or prev).get("value")
-        except (OSError, ValueError, AttributeError):
-            prev_total = None
+    prev_total = _prev_total(Path(__file__).resolve().parent, cpus)
 
     full = {
         "metric": "headline_queries_total",
         "value": total,
         "unit": "sec",
+        "timing": "end_to_end",
         "queries": per,
-        "compile": compile_s,
         "duckdb": duck,
         "ratio": ratio,
         "duckdb_total": duck_total,
@@ -160,7 +166,7 @@ def main() -> None:
         # 1-min load average at start makes that attributable in-artifact.
         "load_1m": round(os.getloadavg()[0], 2),
     }
-    # Full detail object (per-query compile + ratios) as a sidecar next to
+    # Full detail object (with per-query ratios) as a sidecar next to
     # the repo root — self-contained even if the caller truncates stdout.
     with open(Path(__file__).resolve().parent / "bench_full.json", "w") as fh:
         json.dump(full, fh, indent=1)
@@ -170,9 +176,9 @@ def main() -> None:
     # budget or the parsed object is lost (BENCH_r05 was truncated this
     # way): the line carries the judged essentials (per-query spark + duck
     # seconds, totals, ratio_total — per-query ratios are the quotient of
-    # the two dicts); compile/ratio detail lives in bench_full.json.
+    # the two dicts); the ratio detail lives in bench_full.json.
     line = json.dumps(
-        {k: v for k, v in full.items() if k not in ("compile", "ratio")},
+        {k: v for k, v in full.items() if k != "ratio"},
         separators=(",", ":"),
     )
     if len(line) > 1900:  # loud failure beats a silently-truncated artifact

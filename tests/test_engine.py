@@ -79,6 +79,26 @@ def test_bucketed_table_rebuilds_on_source_regeneration(spark, tmp_path):
     assert t2.count() == 37, "stale bucketed layout served after regeneration"
 
 
+def test_work_dir_keeps_same_named_inputs_apart():
+    """Two input dirs with one base name must not share (and rebuild)
+    each other's derived files, yet both stay under .work/<base name>/,
+    which is what a caller removes to drop them."""
+    import os
+
+    from vault_8_hive_spark.catalog import WORK_DIR, work_dir, work_table
+
+    base = os.path.join(WORK_DIR, "sf0.1")
+    a, b = work_dir("/a/sf0.1", "opt"), work_dir("/b/sf0.1", "opt")
+    assert a != b
+    assert not a.startswith(b + os.sep) and not b.startswith(a + os.sep)
+    assert a.startswith(base + os.sep) and b.startswith(base + os.sep)
+    assert work_dir("/a/sf0.1/", "opt") == a  # one key per directory
+    assert work_table("/a/sf0.1", "t") != work_table("/b/sf0.1", "t")
+    # A corpus living directly under .work keeps its derived files out of itself.
+    fx = os.path.join(WORK_DIR, "sf1_native")
+    assert not work_dir(fx, "opt").startswith(fx + os.sep)
+
+
 def test_committer_selection_by_destination():
     """Committer choice is a pure function of the destination URI —
     object stores must get the no-rename magic-committer stack, rename-

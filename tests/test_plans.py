@@ -199,6 +199,7 @@ def test_selfjoin_shares_one_exchange(spark, sf_dir):
     try:
         for name, scan_max in (
             ("text_minhash_lsh", 1),
+            ("text_incremental_neardup", 1),
             ("vec_cosine_neardup_pairs", 1),
         ):
             df = QUERIES[name].fn(spark, sf_dir)
@@ -314,11 +315,10 @@ def test_bucketed_layout_one_file_per_bucket(spark, sf_dir):
     slower than the shuffle join they're meant to beat)."""
     import os
 
-    from vault_8_hive_spark.catalog import WORK_DIR, bucketed_table
+    from vault_8_hive_spark.catalog import bucketed_table, work_dir
 
     bucketed_table(spark, sf_dir, "orders", "o_custkey")
-    sf_tag = os.path.basename(os.path.normpath(sf_dir))
-    path = os.path.join(WORK_DIR, sf_tag, "bucket", "orders_by_o_custkey_8")
+    path = os.path.join(work_dir(sf_dir, "bucket"), "orders_by_o_custkey_8")
     files = [f for f in os.listdir(path) if f.startswith("part-")]
     assert len(files) == 8, files
 
@@ -708,3 +708,28 @@ def test_open_backlog_joins_once(spark, sf_dir):
     n_joins = sum(plan.count(j) for j in
                   ("SortMergeJoin", "BroadcastHashJoin", "ShuffledHashJoin"))
     assert n_joins == 1, plan[:2000]
+
+
+def test_materialization_policy_lives_in_one_helper():
+    """Every per-run materialization goes through session.materialize_once,
+    whose docstring carries the rationale (lazy, an optimizer barrier, not
+    persist()), and no query carries a per-query timing flag: every query
+    is timed end to end."""
+    import inspect
+    from pathlib import Path
+
+    import vault_8_hive_spark
+    from vault_8_hive_spark import session
+
+    helper = inspect.getsource(session.materialize_once)
+    assert ".localCheckpoint(" in helper
+    pkg = Path(vault_8_hive_spark.__file__).parent
+    stray = []
+    for path in sorted(pkg.rglob("*.py")):
+        src = path.read_text(encoding="utf-8")
+        if path == Path(session.__file__):
+            src = src.replace(helper, "")
+        for word in (".localCheckpoint(", "rebuild_per_run"):
+            if word in src:
+                stray.append(f"{path.relative_to(pkg)}: {word}")
+    assert not stray, stray

@@ -8,7 +8,7 @@ import uuid
 
 from pyspark.sql import functions as F
 
-from vault_8_hive_spark.queries.formats import WORK_DIR
+from vault_8_hive_spark.catalog import WORK_DIR
 from vault_8_hive_spark.streaming.ops import stream_events
 
 
@@ -540,10 +540,10 @@ def test_state_metadata_reader(spark, sf_dir):
     the statestore rows must equal the batch aggregate (the registered
     query checks values — here we pin the metadata surface)."""
     from vault_8_hive_spark.queries import all_queries
-    from vault_8_hive_spark.queries.formats import _work
+    from vault_8_hive_spark.catalog import work_dir
 
     all_queries()["stream_state_introspect"].fn(spark, sf_dir).count()
-    ck = _work(sf_dir, "state_introspect_ckpt")
+    ck = work_dir(sf_dir, "state_introspect_ckpt")
     md = spark.read.format("state-metadata").load(ck).collect()
     assert len(md) == 1
     assert md[0].operatorName == "stateStoreSave"

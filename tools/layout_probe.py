@@ -11,11 +11,11 @@ equally (same discipline as ab_probe_r08.py).
 
 Arms:
   --mode layout  : same bytes, two compacted layouts (chunks=4 vs 32)
-                   via two copies of the sf dir (catalog._opt_path keys
-                   the .work layout by the dir basename)
+                   via two copies of the sf dir (catalog.work_dir keys
+                   compacted copies per input dir)
   --mode parts   : one layout, shuffle.partitions flipped 8 vs 32 per
-                   run (runtime-settable; compile cost of the flip is
-                   excluded by benchlib's exec/compile split)
+                   run (runtime-settable; timed end to end, so the
+                   recompile the flip forces is inside the number)
 
 Usage: python tools/layout_probe.py --mode layout [query ...]
 Measurement tooling only; run exclusively.
@@ -116,8 +116,8 @@ def main() -> None:
         arm_b(q)
         ea, eb = [], []
         for _ in range(runs):
-            ea.append(arm_a(q)[0])
-            eb.append(arm_b(q)[0])
+            ea.append(arm_a(q))
+            eb.append(arm_b(q))
         ma, mb = statistics.median(ea), statistics.median(eb)
         print(
             f"{name}: {label_a}={ma:.3f}s {label_b}={mb:.3f}s "

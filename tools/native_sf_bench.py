@@ -110,8 +110,7 @@ def main() -> None:
 
     per: dict[str, float] = {}
     for name, q in bench_set.items():
-        e, _c = time_query(spark, q, SF_DIR, runs=3)
-        per[name] = round(e, 4)
+        per[name] = round(time_query(spark, q, SF_DIR, runs=3), 4)
         print(f"spark {name} {per[name]}", file=sys.stderr, flush=True)
 
     duck: dict[str, float] = {}

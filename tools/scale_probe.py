@@ -9,7 +9,7 @@ must not look like duplicates of each other), and vec_id offsets for the
 embedding corpus. Then runs the comparable headline queries through BOTH
 engines on the SAME generated files (fresh-build-per-run methodology,
 identical to bench.py — see vault_8_hive_spark/benchlib.py) and prints
-one JSON line with both engines' times plus exec and end-to-end ratios.
+one JSON line with both engines' end-to-end times and their ratios.
 
 This is measurement tooling, not part of the query surface: the driver's
 tables remain the only correctness inputs.
@@ -151,13 +151,10 @@ def main() -> None:
 
     qs = all_queries()
     spark_times: dict[str, float] = {}
-    spark_compile: dict[str, float] = {}
     for name in COMPARABLE:
         qs[name].fn(spark, dst).toPandas()  # warm: JIT/codegen/footers
     for name in COMPARABLE:
-        e, c = time_query(spark, qs[name], dst)
-        spark_times[name] = round(e, 4)
-        spark_compile[name] = round(c, 4)
+        spark_times[name] = round(time_query(spark, qs[name], dst), 4)
 
     conn = duckdb.connect()
     for t in ("region", "nation", "customer", "supplier", "part", "orders",
@@ -177,16 +174,8 @@ def main() -> None:
         duck_times[name] = round(statistics.median(runs), 4)
 
     ratios = {n: round(spark_times[n] / duck_times[n], 2) for n in COMPARABLE}
-    # e2e folds Spark's per-query compile back in (DuckDB's numbers always
-    # include its ~ms planner) so the comparison is readable both ways.
-    ratios_e2e = {
-        n: round((spark_times[n] + spark_compile[n]) / duck_times[n], 2)
-        for n in COMPARABLE
-    }
     print(json.dumps({"replicas": REPLICAS, "spark": spark_times,
-                      "spark_compile": spark_compile,
                       "duckdb": duck_times, "ratio": ratios,
-                      "ratio_e2e": ratios_e2e,
                       "spark_total": round(sum(spark_times.values()), 3),
                       "duckdb_total": round(sum(duck_times.values()), 3)}))
 

@@ -1,26 +1,17 @@
-"""Timing methodology shared by bench.py and tools/scale_probe.py.
+"""Timing methodology shared by bench.py and the tools/ probes.
 
 Every timed run builds a FRESH DataFrame from the query function and
-executes it end-to-end. Re-executing a previously-executed DataFrame
-object would serve cached shuffle outputs — Spark keeps the shuffle
-files of a physical-plan instance and schedules repeat actions as
-"skipped stages", so only the post-shuffle tail would run and the number
-would measure cached-shuffle serving, not execution. A fresh build per
-run derives a new plan instance (new RDD lineage), so every scan, map,
-and shuffle stage genuinely re-executes.
+times it end to end: from calling fn() (Python plan build, and whatever
+fn() itself executes, such as a driven stream or a collected Gram)
+through Catalyst compile and execution to the Arrow result in pandas.
 
-Catalyst compile cost (Python plan construction + analysis/optimization/
-physical planning) is measured INSIDE each run — between fn() and the
-forced executedPlan — and reported as a separate column rather than
-excluded by plan reuse: the execution number stays an honest full-DAG
-time, and the compile column makes the engine's fixed per-query overhead
-visible instead of hidden (an engine serving a repeated workload would
-amortize it through a plan cache; a cold query pays it once).
-
-Queries whose fn() materializes data mid-build (localCheckpoint —
-``rebuild_per_run=True``) are timed end-to-end with compile folded into
-the execution number: the split would park real execution inside the
-compile window.
+Re-executing a previously-executed DataFrame object would serve cached
+shuffle outputs — Spark keeps the shuffle files of a physical-plan
+instance and schedules repeat actions as "skipped stages", so only the
+post-shuffle tail would run. A fresh build derives a new plan instance
+(new RDD lineage), so every scan, map, and shuffle stage re-executes.
+Splitting the time into phases is the traced benchmark's job
+(perfbench/run.py --trace 1), not this timer's.
 """
 
 from __future__ import annotations
@@ -29,24 +20,16 @@ import statistics
 import time
 
 
-def time_query(spark, q, sf_dir: str, runs: int = 3) -> tuple[float, float]:
-    """Median (exec_seconds, compile_seconds) over `runs` fresh builds."""
+def time_query(spark, q, sf_dir: str, runs: int = 3) -> float:
+    """Median end-to-end seconds over `runs` fresh builds."""
     import gc
 
-    execs, compiles = [], []
+    times = []
     for _ in range(runs):
         t0 = time.perf_counter()
         df = q.fn(spark, sf_dir)
-        df._jdf.queryExecution().executedPlan()  # force the compile phase
-        t1 = time.perf_counter()
         df.toPandas()
-        t2 = time.perf_counter()
-        if q.rebuild_per_run:
-            execs.append(t2 - t0)
-            compiles.append(0.0)
-        else:
-            execs.append(t2 - t1)
-            compiles.append(t1 - t0)
+        times.append(time.perf_counter() - t0)
         # Reclaim this run's plan garbage (shuffle files, broadcasts)
         # OUTSIDE the timed window: fresh-build runs generate real
         # per-run garbage, and the async ContextCleaner's block removal
@@ -55,4 +38,4 @@ def time_query(spark, q, sf_dir: str, runs: int = 3) -> tuple[float, float]:
         gc.collect()
         spark._jvm.System.gc()
         time.sleep(0.2)
-    return statistics.median(execs), statistics.median(compiles)
+    return statistics.median(times)

@@ -13,7 +13,9 @@ broadcast — `dim()` wraps them in an explicit broadcast hint.
 
 from __future__ import annotations
 
+import hashlib
 import os
+import re
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -94,14 +96,37 @@ def marker_current(marker: str, fingerprint: str) -> bool:
         return False
 
 
+def _work_key(sf_dir: str) -> tuple[str, str]:
+    src = os.path.abspath(sf_dir)
+    tag = os.path.basename(src)
+    # A corpus living directly under WORK_DIR (e.g. a regenerated native
+    # sf1 at .work/sf1_native) must not have its derived files written
+    # into itself (directory-scanning readers then trip on the extra
+    # roots); they go to a sibling namespace.
+    if os.path.dirname(src) == os.path.abspath(WORK_DIR):
+        tag += "_fx"
+    return tag, hashlib.sha1(src.encode()).hexdigest()[:12]
+
+
+def work_dir(sf_dir: str, kind: str) -> str:
+    """Where the engine keeps what it derives from input dir `sf_dir`
+    (compacted copies, bucketed tables, fixtures, stream checkpoints):
+    .work/<base name>/<kind>/<digest of the absolute path>. The digest
+    keeps two input dirs with one base name apart; everything stays
+    under .work/<base name>/, so removing that directory drops every
+    derived file of the dir."""
+    tag, digest = _work_key(sf_dir)
+    return os.path.join(WORK_DIR, tag, kind, digest)
+
+
+def work_table(sf_dir: str, stem: str) -> str:
+    """Session-catalog name for a table kept under work_dir(sf_dir, ...),
+    unique per input dir like the path."""
+    return re.sub(r"\W", "_", "_".join((stem, *_work_key(sf_dir))))
+
+
 def _opt_path(sf_dir: str, name: str) -> str:
-    sf_tag = os.path.basename(os.path.normpath(sf_dir))
-    # Same guard as queries.formats._work: a corpus living directly
-    # under WORK_DIR must not have its compacted copies written into
-    # itself (directory-scanning readers then trip on the extra roots).
-    if os.path.dirname(os.path.normpath(sf_dir)) == os.path.normpath(WORK_DIR):
-        sf_tag += "_fx"
-    return os.path.join(WORK_DIR, sf_tag, "opt", name)
+    return os.path.join(work_dir(sf_dir, "opt"), name)
 
 
 def _src_fingerprint(sf_dir: str, name: str) -> str:
@@ -255,9 +280,8 @@ def bucketed_table(
     from .session import prep
 
     prep(spark)
-    sf_tag = os.path.basename(os.path.normpath(sf_dir))
-    tbl = f"{name}_by_{key}_{buckets}_{sf_tag}".replace(".", "_").replace("-", "_")
-    path = os.path.join(WORK_DIR, sf_tag, "bucket", f"{name}_by_{key}_{buckets}")
+    tbl = work_table(sf_dir, f"{name}_by_{key}_{buckets}")
+    path = os.path.join(work_dir(sf_dir, "bucket"), f"{name}_by_{key}_{buckets}")
     tag = os.path.join(path, "_SRC_FINGERPRINT")
     fp = _src_fingerprint(sf_dir, name)
     if not marker_current(tag, fp):

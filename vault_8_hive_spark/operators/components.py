@@ -6,17 +6,20 @@ document survives per group. Components = transitive closure of the pair
 graph; cluster id = the minimum doc id reachable.
 
 Scale: each iteration is one shuffle join on the node key + a grouped min
-— the standard Pregel-style plan. Label state is eagerly localCheckpointed
-per iteration so lineage stays flat (without it, iteration k replays all
-k-1 prior joins AND the upstream pair pipeline). Convergence needs at most
-diameter(graph) iterations; near-dup graphs are shallow (dup groups are
-cliques or short chains), so the loop exits after 2-3 rounds in practice.
+— the standard Pregel-style plan. Label state is materialized once per
+iteration (session.materialize_once) so lineage stays flat (without it,
+iteration k replays all k-1 prior joins AND the upstream pair pipeline).
+Convergence needs at most diameter(graph) iterations; near-dup graphs are
+shallow (dup groups are cliques or short chains), so the loop exits after
+2-3 rounds in practice.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..session import materialize_once
 
 
 def connected_components(
@@ -30,19 +33,17 @@ def connected_components(
     # hash-partitioned by node (groupBy/join output, preserved through the
     # checkpoint's LogicalRDD outputPartitioning) — co-partitioning both
     # sides up front removes every join Exchange from the loop body, so an
-    # iteration pays exactly ONE shuffle (the groupBy("src") min).
-    # LAZY checkpoint (eager=False): the materialization rides iteration
-    # 1's checkpoint job instead of being a separate driver round-trip —
-    # at bench scale each job costs a scheduling round-trip that rivals
-    # the actual work (measured: the r7 loop spent 2.1 s in 8 jobs whose
-    # total executor work was a fraction of that). Later iterations read
-    # the cached blocks exactly as with eager=True.
-    und = (
+    # iteration pays exactly ONE shuffle (the groupBy("src") min). The
+    # lazy materialization rides iteration 1's checkpoint job instead of
+    # being a separate driver round-trip — at bench scale each job costs
+    # a scheduling round-trip that rivals the actual work (measured: an
+    # eager loop spent 2.1 s in 8 jobs whose total executor work was a
+    # fraction of that).
+    und = materialize_once(
         edges.select(F.col(a).alias("src"), F.col(b).alias("dst"))
         .unionByName(edges.select(F.col(b).alias("src"), F.col(a).alias("dst")))
-        .distinct()
-        .repartition("dst")
-        .localCheckpoint(eager=False)  # edges may come from an expensive pipeline
+        .distinct(),
+        "dst",
     )
     # Initial labels are one cheap distinct over und's cached blocks and
     # feed only iteration 1's lineage — not worth their own job either.
@@ -64,14 +65,12 @@ def connected_components(
         # blocks, and returns the changed-count — the r7 loop paid two
         # jobs per round (eager checkpoint, then a second full join for
         # the count) plus two up-front checkpoint jobs.
-        new = (
-            labels.join(nbr, labels.node == nbr.src, "left")
-            .select(
+        new = materialize_once(
+            labels.join(nbr, labels.node == nbr.src, "left").select(
                 "node",
                 F.least(F.col("label"), F.coalesce("nbr_min", "label")).alias("label"),
                 (F.col("nbr_min") < F.col("label")).alias("improved"),
             )
-            .localCheckpoint(eager=False)
         )
         changed = new.where("improved").count()
         labels = new.select("node", "label")

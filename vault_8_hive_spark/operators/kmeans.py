@@ -15,6 +15,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..session import materialize_once
 from .similarity import lit_vec
 
 
@@ -71,16 +72,8 @@ def kmeans(
     for _ in range(iters):
         # One materialization per iteration, shared by the inertia action
         # and the centroid-update action (otherwise the assignment plan
-        # executes twice). Lazy localCheckpoint, not persist(): the old
-        # persist()+unpersist() pair had no cross-run CacheManager reuse
-        # (entries were removed each iteration), but the checkpoint is
-        # the uniform per-run-materialization posture of every iterative
-        # operator after the r9 persist sweep (see queries/graph.py
-        # graph_pagerank) — blocks are released by the ContextCleaner
-        # when the iterate's RDD goes out of scope.
-        assigned = assign_clusters(df, vec_col, centroids).localCheckpoint(
-            eager=False
-        )
+        # executes twice).
+        assigned = materialize_once(assign_clusters(df, vec_col, centroids))
         inertia.append(assigned.agg(F.sum("dist2")).collect()[0][0])
         new_rows = (
             assigned.select("cluster", F.posexplode(vec_col).alias("pos", "val"))

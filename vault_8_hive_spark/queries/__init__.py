@@ -33,10 +33,6 @@ class Query:
     oracle: str | None  # DuckDB SQL, or None -> driver does rows-only check
     tags: tuple[str, ...] = ()
     bench: bool = False  # include in bench.py headline set
-    # True when the plan embeds materialized data (localCheckpoint):
-    # timing harnesses must rebuild a fresh DataFrame per run instead of
-    # re-executing a prepared one, or they measure cached-data serving.
-    rebuild_per_run: bool = False
     doc: str = ""
 
 
@@ -138,7 +134,6 @@ def register(
     oracle: str | None = None,
     tags: tuple[str, ...] = (),
     bench: bool = False,
-    rebuild_per_run: bool = False,
 ):
     """Decorator: register fn(spark, sf_dir) under `name` with its oracle."""
 
@@ -146,8 +141,7 @@ def register(
         if name in QUERIES:
             raise ValueError(f"duplicate query name {name!r}")
         QUERIES[name] = Query(
-            name=name, fn=fn, oracle=oracle, tags=tags, bench=bench,
-            rebuild_per_run=rebuild_per_run, doc=fn.__doc__ or ""
+            name=name, fn=fn, oracle=oracle, tags=tags, bench=bench, doc=fn.__doc__ or ""
         )
         return fn
 

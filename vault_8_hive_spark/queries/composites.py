@@ -109,11 +109,7 @@ def _composite(
             ]
             parts.append(f"SELECT {', '.join(sel)} FROM (\n{inner}\n) AS _b")
         oracle = "\nUNION ALL\n".join(parts)
-    # A composite inherits eager-fn timing semantics from its branches:
-    # if ANY branch drives a stream inside fn (rebuild_per_run), the
-    # composite's fn does too, so benchlib must time it end-to-end.
-    rebuild = any(QUERIES[fine].rebuild_per_run for _, fine, _ in branches)
-    register(name, oracle=oracle, tags=tags, rebuild_per_run=rebuild)(fn)
+    register(name, oracle=oracle, tags=tags)(fn)
 
 
 # --- aggregates -------------------------------------------------------------

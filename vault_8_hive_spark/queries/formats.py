@@ -21,27 +21,14 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from ..catalog import build_lock, marker_current, table, write_atomic
+from ..catalog import build_lock, marker_current, table, work_dir, write_atomic
 from ..session import prep
 from . import register
-
-WORK_DIR = os.path.join(os.path.dirname(os.path.dirname(os.path.dirname(__file__))), ".work")
-
-
-def _work(sf_dir: str, name: str) -> str:
-    sf_tag = os.path.basename(os.path.normpath(sf_dir))
-    # A corpus living DIRECTLY under WORK_DIR (e.g. a regenerated native
-    # sf1 at .work/sf1_native) would otherwise resolve its fixture dir to
-    # the corpus dir itself, dropping checkpoints and sink output between
-    # the parquet tables; keep derived fixtures in a sibling namespace.
-    if os.path.dirname(os.path.normpath(sf_dir)) == os.path.normpath(WORK_DIR):
-        sf_tag += "_fx"
-    return os.path.join(WORK_DIR, sf_tag, name)
 
 
 def _ensure_csv(spark: SparkSession, sf_dir: str) -> str:
     """nation as a headered CSV (written once, deterministic content)."""
-    path = _work(sf_dir, "nation_csv")
+    path = work_dir(sf_dir, "nation_csv")
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
         (
             table(spark, sf_dir, "nation")
@@ -55,7 +42,7 @@ def _ensure_csv(spark: SparkSession, sf_dir: str) -> str:
 
 def _ensure_json(spark: SparkSession, sf_dir: str) -> str:
     """supplier as JSON-lines."""
-    path = _work(sf_dir, "supplier_json")
+    path = work_dir(sf_dir, "supplier_json")
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
         table(spark, sf_dir, "supplier").coalesce(1).write.mode("overwrite").json(path)
     return path
@@ -112,7 +99,7 @@ def scan_json_schema(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _ensure_orders_by_year(spark: SparkSession, sf_dir: str) -> str:
-    path = _work(sf_dir, "orders_by_year")
+    path = work_dir(sf_dir, "orders_by_year")
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
         (
             table(spark, sf_dir, "orders")
@@ -183,7 +170,7 @@ def sink_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     format with predicate pushdown/pruning in Spark — interchange with
     ORC-based warehouses without a correctness cliff."""
     prep(spark)
-    path = _work(sf_dir, "part_orc")
+    path = work_dir(sf_dir, "part_orc")
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
         table(spark, sf_dir, "part").write.mode("overwrite").orc(path)
     df = spark.read.orc(path)
@@ -282,11 +269,10 @@ def io_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     work; mergeSchema is the discovery-time tool."""
     import os
 
-    from ..catalog import WORK_DIR, _src_fingerprint
+    from ..catalog import _src_fingerprint
 
     prep(spark)
-    sf_tag = os.path.basename(os.path.normpath(sf_dir))
-    base = os.path.join(WORK_DIR, sf_tag, "evolve", "orders")
+    base = os.path.join(work_dir(sf_dir, "evolve"), "orders")
     orders = table(spark, sf_dir, "orders")
     # Fingerprint-guard the derived generations: a regenerated landing
     # file must rebuild them (same contract as catalog compaction).
@@ -424,7 +410,7 @@ def _ensure_corrupt_jsonl(spark: SparkSession, sf_dir: str) -> str:
     regeneration rebuilds it."""
     import json as _json
 
-    path = _work(sf_dir, "docs_corrupt_jsonl")
+    path = work_dir(sf_dir, "docs_corrupt_jsonl")
     src = os.path.join(sf_dir, "documents.parquet")
     fingerprint = _src_fingerprint(src)
     marker = os.path.join(path, "_FINGERPRINT")
@@ -507,7 +493,7 @@ def _ensure_text_lines(spark: SparkSession, sf_dir: str) -> str:
     folded to a single space so one record is always one line. Written
     deterministically and fingerprinted against the source parquet so a
     regenerated testdata dir rebuilds it."""
-    path = _work(sf_dir, "docs_text_lines")
+    path = work_dir(sf_dir, "docs_text_lines")
     src = os.path.join(sf_dir, "documents.parquet")
     fingerprint = _src_fingerprint(src)
     marker = os.path.join(path, "_FINGERPRINT")
@@ -607,7 +593,7 @@ def _ensure_binary_blobs(spark: SparkSession, sf_dir: str) -> str:
     """One deterministic .bin file per region row (content
     '<key>|<name>\\n'), fingerprinted against the source parquet so a
     regenerated testdata dir rebuilds the blobs."""
-    path = _work(sf_dir, "binary_blobs")
+    path = work_dir(sf_dir, "binary_blobs")
     marker = os.path.join(path, "_FINGERPRINT")
     src = f"{sf_dir}/region.parquet"
     fingerprint = _src_fingerprint(src)
@@ -685,7 +671,7 @@ def _ensure_rangefiles(spark: SparkSession, sf_dir: str) -> str:
     near-disjoint key range, so a min/max manifest can prune most of
     them. Fingerprinted against the source parquet so a regenerated
     testdata dir rebuilds the layout."""
-    path = _work(sf_dir, "orders_rangefiles")
+    path = work_dir(sf_dir, "orders_rangefiles")
     marker = os.path.join(path, "_FINGERPRINT")
     src = f"{sf_dir}/orders.parquet"
     fingerprint = _src_fingerprint(src)
@@ -952,7 +938,7 @@ def io_cached_plan_reuse(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _ensure_xml(spark: SparkSession, sf_dir: str) -> str:
     """supplier as XML rows (written once, deterministic content) —
     exercises Spark 4's BUILT-IN xml datasource on the write side."""
-    path = _work(sf_dir, "supplier_xml")
+    path = work_dir(sf_dir, "supplier_xml")
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
         (
             table(spark, sf_dir, "supplier")
@@ -977,7 +963,6 @@ GROUP BY s_nationkey
 ORDER BY s_nationkey
 """,
     tags=("scan", "sink", "xml", "format"),
-    rebuild_per_run=True,
 )
 def scan_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """XML round-trip through Spark 4's native xml datasource (the

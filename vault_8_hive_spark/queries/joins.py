@@ -651,17 +651,16 @@ def join_cbo_reorder(spark: SparkSession, sf_dir: str) -> DataFrame:
     other query's planning is perturbed."""
     import os
 
-    from ..catalog import WORK_DIR, bucketed_table, table as load
+    from ..catalog import bucketed_table, table as load, work_dir, work_table
 
     prep(spark)
     o = bucketed_table(spark, sf_dir, "orders", "o_custkey")
     c = bucketed_table(spark, sf_dir, "customer", "c_custkey")
-    sf_tag = os.path.basename(os.path.normpath(sf_dir)).replace(".", "_")
-    otbl = f"orders_by_o_custkey_8_{sf_tag}"
-    ctbl = f"customer_by_c_custkey_8_{sf_tag}"
-    ntbl = f"nation_cbo_{sf_tag}"
+    otbl = work_table(sf_dir, "orders_by_o_custkey_8")
+    ctbl = work_table(sf_dir, "customer_by_c_custkey_8")
+    ntbl = work_table(sf_dir, "nation_cbo")
     if not spark.catalog.tableExists(ntbl):
-        path = os.path.join(WORK_DIR, sf_tag, "cbo", "nation")
+        path = os.path.join(work_dir(sf_dir, "cbo"), "nation")
         (
             load(spark, sf_dir, "nation")
             .write.mode("overwrite")

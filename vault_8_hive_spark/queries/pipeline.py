@@ -14,7 +14,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import table
-from ..session import prep
+from ..session import materialize_once, prep
 from . import QUERIES, register
 from .text import _SIMHASH_SCHEMA, _simhash_batch
 
@@ -81,7 +81,6 @@ FROM cand
 WHERE bit_count(xor(fa, fb)) <= {_HAMMING_MAX}
 """,
     tags=("text", "dedup", "simhash", "lsh", "udf"),
-    rebuild_per_run=True,  # plan embeds a localCheckpoint
 )
 def text_simhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash near-duplicate pairs: 64-bit fingerprints (the mapInPandas
@@ -102,19 +101,20 @@ def text_simhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("text").isNotNull() & (F.col("text") != ""))
         .mapInPandas(_simhash_batch, schema=_SIMHASH_SCHEMA)
     )
-    # localCheckpoint (not a shared repartition exchange): a mapInPandas
+    # Materialized once (not a shared repartition exchange): a mapInPandas
     # subtree embeds a PythonUDF whose result id survives plan
     # canonicalization, so the planner cannot collapse the two self-join
-    # sides into one ReusedExchange the way the pure-JVM dedup queries do
-    # (text_minhash_lsh, vec_cosine_neardup_pairs) — the checkpoint is
-    # what guarantees the Python stage runs exactly once. At cluster
-    # scale the same handoff is a staged fingerprint table.
-    sigs = sims.select(
-        "doc_id",
-        "simhash_hex",
-        F.conv(F.substring("simhash_hex", 1, 8), 16, 10).cast("bigint").alias("h1"),
-        F.conv(F.substring("simhash_hex", 9, 8), 16, 10).cast("bigint").alias("h2"),
-    ).localCheckpoint(eager=False)
+    # sides into one ReusedExchange — the checkpoint is what guarantees
+    # the Python stage runs exactly once. At cluster scale the same
+    # handoff is a staged fingerprint table.
+    sigs = materialize_once(
+        sims.select(
+            "doc_id",
+            "simhash_hex",
+            F.conv(F.substring("simhash_hex", 1, 8), 16, 10).cast("bigint").alias("h1"),
+            F.conv(F.substring("simhash_hex", 9, 8), 16, 10).cast("bigint").alias("h2"),
+        )
+    )
     bands = sigs.select(
         "doc_id",
         "h1",
@@ -160,7 +160,6 @@ def text_simhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # CTE — an independent formulation of the component computation.
     oracle=None,  # assigned below (needs text_minhash_lsh's oracle text)
     tags=("text", "dedup", "iterative", "minhash", "lsh"),
-    rebuild_per_run=True,
 )
 def text_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-duplicate groups: MinHash-LSH verified pairs -> connected
@@ -218,7 +217,6 @@ QUERIES["text_dedup_clusters"] = _dc.replace(
     "text_leakfree_split",
     oracle=None,  # assigned below (needs text_minhash_lsh's oracle text)
     tags=("text", "pipeline", "sampling", "dedup", "leakage", "iterative"),
-    rebuild_per_run=True,
 )
 def text_leakfree_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup-consistent train/valid/test split: every document is
@@ -479,7 +477,6 @@ UNION ALL SELECT 'b5_sampled', COUNT(*), MIN(doc_id), MAX(doc_id) FROM d4
     "text_curation_pipeline",
     oracle=None,  # assigned below (embeds text_minhash_lsh's oracle text)
     tags=("text", "pipeline", "dedup", "quality", "sampling", "iterative"),
-    rebuild_per_run=True,  # the components step localCheckpoints labels
 )
 def text_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The capstone composition: the full pre-training curation pass as
@@ -1607,16 +1604,12 @@ def ml_conformal_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
     b = (n * sxy - sx * sy) / F.nullif(n * sxx - sx * sx, F.lit(0.0))
     fit = s.select(n.alias("n"), b.alias("b"), ((sy - b * sx) / n).alias("a"))
     pred = F.col("a") + F.col("b") * F.col("x")
-    res = (
+    # The residual column (one long per fact row, narrow blocks at scan
+    # partitioning — no exchange) is read by both selection passes below.
+    res = materialize_once(
         v.crossJoin(F.broadcast(fit))
         .where(pred.isNotNull())
         .select(F.round(F.abs(F.col("y") - pred), 0).cast("long").alias("r"))
-        # LAZY localCheckpoint: the residual column (one long per fact
-        # row, narrow blocks at scan partitioning — no exchange) is
-        # materialized once per run and read by both selection passes
-        # below; a fresh build derives a fresh RDD (nothing crosses
-        # bench runs).
-        .localCheckpoint(eager=False)
     )
     # k-th order statistic by EXACT bucket selection (r9). The r7/r8
     # shape ranged-cumsum'd the per-distinct-residual counts
@@ -1731,7 +1724,6 @@ ORDER BY rk
 """,
     tags=("pipeline", "entity-resolution", "blocking", "fuzzy",
           "iterative"),
-    rebuild_per_run=True,
     bench=True,
 )
 def er_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -28,9 +28,6 @@ WHERE ts IS NOT NULL AND ts >= TIMESTAMP '2000-01-01' AND ts < TIMESTAMP '2200-0
 GROUP BY 1, 2
 """,
     tags=("streaming", "window-time"),
-    # fn DRIVES the stream eagerly (availableNow + awaitTermination);
-    # benchlib must time it end-to-end, not just the lazy merge tail
-    rebuild_per_run=True,
 )
 def stream_tumbling_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Watermarked tumbling-window aggregation as a real streaming query;
@@ -72,9 +69,6 @@ FROM sess
 GROUP BY user_id, seq
 """,
     tags=("streaming", "session-window"),
-    # fn DRIVES the stream eagerly (availableNow + awaitTermination);
-    # benchlib must time it end-to-end, not just the lazy merge tail
-    rebuild_per_run=True,
 )
 def stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Native streaming session windows (session_window, 30-min gap).
@@ -104,9 +98,6 @@ WHERE ts IS NOT NULL AND ts >= TIMESTAMP '2000-01-01' AND ts < TIMESTAMP '2200-0
 GROUP BY event_type
 """,
     tags=("streaming", "dedup"),
-    # fn DRIVES the stream eagerly (availableNow + awaitTermination);
-    # benchlib must time it end-to-end, not just the lazy merge tail
-    rebuild_per_run=True,
 )
 def stream_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stateful streaming dedup: the stream is unioned with a full copy of
@@ -132,9 +123,6 @@ WHERE ts IS NOT NULL AND ts >= TIMESTAMP '2000-01-01' AND ts < TIMESTAMP '2200-0
 GROUP BY user_id
 """,
     tags=("streaming", "stateful", "udf"),
-    # fn DRIVES the stream eagerly (availableNow + awaitTermination);
-    # benchlib must time it end-to-end, not just the lazy merge tail
-    rebuild_per_run=True,
 )
 def stream_stateful_user_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Arbitrary stateful processing (applyInPandasWithState): running
@@ -156,9 +144,6 @@ WHERE ts IS NOT NULL AND ts >= TIMESTAMP '2000-01-01' AND ts < TIMESTAMP '2200-0
 GROUP BY c_mktsegment
 """,
     tags=("streaming", "join", "agg"),
-    # fn DRIVES the stream eagerly (availableNow + awaitTermination);
-    # benchlib must time it end-to-end, not just the lazy merge tail
-    rebuild_per_run=True,
 )
 def stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-static join: the event stream enriched against the static
@@ -190,9 +175,9 @@ def _events_split4(spark: SparkSession, sf_dir: str) -> str:
     """events.parquet range-split into 4 files — with maxFilesPerTrigger=1
     each file becomes one micro-batch, so multi-batch state handling is
     actually exercised (a single-file source would collapse to one batch)."""
-    from .formats import _work
+    from ..catalog import work_dir
 
-    src = _work(sf_dir, "events_split4")
+    src = work_dir(sf_dir, "events_split4")
     if not os.path.exists(os.path.join(src, "_SUCCESS")):
         (
             spark.read.parquet(f"{sf_dir}/events.parquet")
@@ -236,9 +221,6 @@ def _late_fixture() -> tuple[list[tuple[int, int]], list[tuple[int, int]], list[
         + ") AS t(window_start, n_events)"
     ),
     tags=("streaming", "watermark", "late-data"),
-    # fn DRIVES the stream eagerly (availableNow + awaitTermination);
-    # benchlib must time it end-to-end, not just the lazy merge tail
-    rebuild_per_run=True,
 )
 def stream_late_data_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Watermark late-data drop, end to end and driver-checkable: two
@@ -256,13 +238,13 @@ def stream_late_data_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     via the checkpoint, and late data costs nothing but the drop."""
     import shutil
 
-    from .formats import _work
+    from ..catalog import work_dir
 
     prep(spark)
     p1, p2, _ = _late_fixture()
-    land = _work(sf_dir, "late_drop_landing")
-    ckpt = _work(sf_dir, "late_drop_ckpt")
-    sink = _work(sf_dir, "late_drop_out")
+    land = work_dir(sf_dir, "late_drop_landing")
+    ckpt = work_dir(sf_dir, "late_drop_ckpt")
+    sink = work_dir(sf_dir, "late_drop_out")
     for d in (land, ckpt, sink):
         shutil.rmtree(d, ignore_errors=True)
 
@@ -311,9 +293,6 @@ FROM events
 GROUP BY user_id
 """,
     tags=("streaming", "foreachBatch", "sink", "agg"),
-    # fn DRIVES the stream eagerly (availableNow + awaitTermination);
-    # benchlib must time it end-to-end, not just the lazy merge tail
-    rebuild_per_run=True,
 )
 def stream_foreach_batch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """foreachBatch sink: the event stream is consumed one file per
@@ -332,11 +311,11 @@ def stream_foreach_batch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import shutil
 
-    from .formats import _work
+    from ..catalog import work_dir
 
     prep(spark)
     src = _events_split4(spark, sf_dir)
-    target = _work(sf_dir, "user_totals_incremental")
+    target = work_dir(sf_dir, "user_totals_incremental")
     ckpt = target + "_ckpt"
     for d in (target, ckpt):
         shutil.rmtree(d, ignore_errors=True)
@@ -436,9 +415,9 @@ def stream_partial_agg(
     partials as a batch DataFrame for the caller's final merge."""
     import shutil
 
-    from .formats import _work
+    from ..catalog import work_dir
 
-    target = _work(sf_dir, name)
+    target = work_dir(sf_dir, name)
     ckpt = target + "_ckpt"
     for d in (target, ckpt):
         shutil.rmtree(d, ignore_errors=True)
@@ -488,9 +467,6 @@ SELECT user_id, COUNT(*) AS n_attributed,
 FROM pairs GROUP BY user_id
 """,
     tags=("streaming", "stream-stream-join", "watermark", "interval"),
-    # fn DRIVES the stream eagerly (availableNow + awaitTermination);
-    # benchlib must time it end-to-end, not just the lazy merge tail
-    rebuild_per_run=True,
 )
 def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-STREAM interval join (view -> purchase attribution): two
@@ -582,9 +558,6 @@ SELECT user_id,
 FROM pairs GROUP BY user_id
 """,
     tags=("streaming", "stream-stream-join", "outer", "watermark", "interval"),
-    # fn DRIVES the stream eagerly (availableNow + awaitTermination);
-    # benchlib must time it end-to-end, not just the lazy merge tail
-    rebuild_per_run=True,
 )
 def stream_stream_left_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-stream LEFT OUTER interval join — "views with NO purchase
@@ -678,10 +651,9 @@ def _flushed_events_landing(spark: SparkSession, sf_dir: str) -> str:
     fingerprinted against the source so testdata regeneration rebuilds it."""
     import shutil
 
-    from ..catalog import normalize_events_ts
-    from .formats import _work
+    from ..catalog import normalize_events_ts, work_dir
 
-    land = _work(sf_dir, "ss_outer_landing")
+    land = work_dir(sf_dir, "ss_outer_landing")
     marker = os.path.join(land, "_FLUSHED")
     src = f"{sf_dir}/events.parquet"
     st = os.stat(src)
@@ -762,9 +734,6 @@ SELECT user_id,
 FROM pairs GROUP BY user_id
 """,
     tags=("streaming", "stream-stream-join", "outer", "watermark", "interval"),
-    # fn DRIVES the stream eagerly (availableNow + awaitTermination);
-    # benchlib must time it end-to-end, not just the lazy merge tail
-    rebuild_per_run=True,
 )
 def stream_stream_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-stream FULL OUTER interval join — both directions of the
@@ -872,9 +841,6 @@ SELECT b.user_id, n_events,
 FROM base b JOIN top USING (user_id)
 """,
     tags=("streaming", "stateful", "transformWithState", "rocksdb"),
-    # fn DRIVES the stream eagerly (availableNow + awaitTermination);
-    # benchlib must time it end-to-end, not just the lazy merge tail
-    rebuild_per_run=True,
 )
 def stream_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Arbitrary stateful streaming v2 (transformWithStateInPandas): the
@@ -955,9 +921,6 @@ FROM base b JOIN top USING (user_id)
 """,
     tags=("streaming", "stateful", "transformWithState", "rocksdb",
           "state-packing"),
-    # fn DRIVES the stream eagerly (availableNow + awaitTermination);
-    # benchlib must time it end-to-end, not just the lazy merge tail
-    rebuild_per_run=True,
 )
 def stream_tws_packed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stateful streaming v2 with the whole per-user state PACKED into
@@ -1016,9 +979,6 @@ WHERE ts IS NOT NULL AND ts >= TIMESTAMP '2000-01-01' AND ts < TIMESTAMP '2200-0
 GROUP BY user_id
 """,
     tags=("streaming", "statestore", "introspection"),
-    # fn DRIVES the stream eagerly (availableNow + awaitTermination);
-    # benchlib must time it end-to-end, not just the lazy merge tail
-    rebuild_per_run=True,
 )
 def stream_state_introspect(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming state introspection (Spark 4 state data source): run a
@@ -1034,7 +994,7 @@ def stream_state_introspect(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import shutil
 
-    from .formats import _work
+    from ..catalog import work_dir
 
     prep(spark)
     from ..functions.exact import dec
@@ -1051,7 +1011,7 @@ def stream_state_introspect(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = ev.groupBy("user_id").agg(
         F.count(F.lit(1)).alias("n"), F.sum("cents").alias("s")
     )
-    ck = _work(sf_dir, "state_introspect_ckpt")
+    ck = work_dir(sf_dir, "state_introspect_ckpt")
     shutil.rmtree(ck, ignore_errors=True)
     name = f"ss_introspect_{os.getpid()}"
     q = (
@@ -1090,9 +1050,6 @@ SELECT user_id,
 FROM conv GROUP BY user_id
 """,
     tags=("streaming", "stream-stream-join", "semi", "watermark", "interval"),
-    # fn DRIVES the stream eagerly (availableNow + awaitTermination);
-    # benchlib must time it end-to-end, not just the lazy merge tail
-    rebuild_per_run=True,
 )
 def stream_stream_left_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-stream LEFT SEMI interval join — "views that DID convert
@@ -1172,9 +1129,6 @@ SELECT user_id,
 FROM pairs GROUP BY user_id
 """,
     tags=("streaming", "stream-stream-join", "outer", "watermark", "interval"),
-    # fn DRIVES the stream eagerly (availableNow + awaitTermination);
-    # benchlib must time it end-to-end, not just the lazy merge tail
-    rebuild_per_run=True,
 )
 def stream_stream_right_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-stream RIGHT OUTER interval join — "purchases with NO view

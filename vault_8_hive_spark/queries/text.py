@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import table
-from ..session import prep
+from ..session import materialize_once, prep
 from . import QUERIES, register
 
 N_HASHES = 8
@@ -176,13 +176,13 @@ def _cap_banded(
     """Df-cap posture for an exploded band/bucket relation keyed by
     `key_cols` (keys must be non-null — true for every call site: md5 /
     hex-slice / sign-bit keys). Returns `(ex, safe)`: `ex` is the band
-    relation materialized ONCE per run (repartitioned by the bucket key
-    then LAZY-localCheckpointed), `safe` is `ex` with the rows of
-    over-cap groups dropped, under the same auto/static/off modes as
-    _cap_sized. Callers cap ONE side of their bucket join (`safe`) and
-    read the other side from `ex` raw — pair-set-equivalent to capping
-    both sides, because a pair needs its bucket key present on BOTH
-    sides and the group size is a property of the key:
+    relation materialized once per run (`materialize_once` on the bucket
+    key), `safe` is `ex` with the rows of over-cap groups dropped, under
+    the same auto/static/off modes as _cap_sized. Callers cap ONE side
+    of their bucket join (`safe`) and read the other side from `ex` raw
+    — pair-set-equivalent to capping both sides, because a pair needs
+    its bucket key present on BOTH sides and the group size is a
+    property of the key:
       pair emitted  <=>  key uncapped  <=>  mx <= CLIFF or k <= cap.
 
     r9 shape (recovers the r8 minhash df-cap regression): the r8 guard
@@ -193,24 +193,20 @@ def _cap_banded(
     ~7 of 8.6 s task time at sf0.1) running TWICE in the first r9
     anti-join spelling because PushDownLeftSemiAntiJoin pushes the cap
     join below any shared repartition and column pruning splits
-    differently-projected consumers. The lazy localCheckpoint is a hard
-    barrier no rule crosses: the fold runs exactly once into the
-    checkpoint blocks (partitioned by the bucket key, which the bucket
-    join needs anyway), and the count/audit branches are cheap
-    hash-aggs over block reads. The cap filter is a broadcast LEFT-ANTI
-    join against the (tiny, usually EMPTY) offending-key set — at scale
-    the per-key count relation is NOT broadcastable but `bad` is.
+    differently-projected consumers. Behind the checkpoint barrier the
+    fold runs exactly once into the checkpoint blocks (partitioned by
+    the bucket key, which the bucket join needs anyway), and the
+    count/audit branches are cheap hash-aggs over block reads. The cap
+    filter is a broadcast LEFT-ANTI join against the (tiny, usually
+    EMPTY) offending-key set — at scale the per-key count relation is
+    NOT broadcastable but `bad` is.
     3-arm interleaved probe (tools/minhash_shape_probe_r09.py, sf0.1,
-    median of 5): win(r8)=1.517s anti=1.713s ckpt=1.374s, rows equal.
-    A fresh build derives a fresh RDD, so nothing is served across
-    bench runs (the label-prop honesty posture)."""
+    median of 5): win(r8)=1.517s anti=1.713s ckpt=1.374s, rows equal."""
     mode, cap = _df_cap_mode(spark)
     nn = bands
     for kc in key_cols:
         nn = nn.where(F.col(kc).isNotNull())
-    ex = nn.repartition(*[F.col(kc) for kc in key_cols]).localCheckpoint(
-        eager=False
-    )
+    ex = materialize_once(nn, *key_cols)
     if mode == "off":
         return ex, ex
     kcnt = ex.groupBy(*key_cols).agg(F.count(F.lit(1)).alias("_df_k"))
@@ -324,16 +320,12 @@ def text_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Repartition before the CPU-heavy hashing: a single parquet file is
     # one input split, which would serialize all md5 work into one task.
     par = spark.sparkContext.defaultParallelism
-    # The shingled docs are the shared materialization point: a lazy
-    # localCheckpoint partitioned on doc_id, so the corpus is scanned and
-    # shingled exactly once — the band checkpoint (_cap_banded) and both
-    # verification rehydration sides all read these blocks (asserted in
-    # tests/test_plans.py through the checkpoint lineages).
-    sh = (
-        _shingled(table(spark, sf_dir, "documents"))
-        .repartition(par, "doc_id")
-        .localCheckpoint(eager=False)
-    )
+    # The shingled docs are the shared materialization point, partitioned
+    # on doc_id, so the corpus is scanned and shingled exactly once — the
+    # band checkpoint (_cap_banded) and both verification rehydration
+    # sides all read these blocks (asserted in tests/test_plans.py through
+    # the checkpoint lineages).
+    sh = materialize_once(_shingled(table(spark, sf_dir, "documents")), "doc_id", n=par)
     bands = _minhash_bands(sh)
     # df-cap on bucket size (auto, see _cap_banded): the helper's
     # checkpoint is partitioned on band_key — the SAME partitioning the
@@ -535,14 +527,9 @@ def text_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     rehydrates shingle sets for candidate pairs only."""
     prep(spark)
     par = spark.sparkContext.defaultParallelism
-    # isnotnull(doc_id) below the exchange: same ReusedExchange-
-    # preserving no-op as text_minhash_lsh (the inferred join constraint
-    # cannot push through the df-cap window).
-    sh = (
-        _shingled(table(spark, sf_dir, "documents"))
-        .where(F.col("doc_id").isNotNull())
-        .repartition(par, "doc_id")
-    )
+    # Scanned and shingled once, as in text_minhash_lsh: the band
+    # checkpoint and both verification sides read these blocks.
+    sh = materialize_once(_shingled(table(spark, sf_dir, "documents")), "doc_id", n=par)
     bands = _minhash_bands(sh)
     # Same df-cap posture as text_minhash_lsh: bucket size is audited
     # over the FULL band relation (a boilerplate bucket is hot however
@@ -2051,20 +2038,18 @@ def text_setsim_prefix_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # all three consumers of sh (ReuseExchange — the r7 shape computed
     # the shingle projection in two separate 4-task scan stages).
     par = spark.sparkContext.defaultParallelism
-    # r9: LAZY localCheckpoint on the shingled relation. The r8 shape
-    # relied on all three consumers (tok, x, y) sharing the repartition
-    # exchange via ReusedExchange — but CollapseRepartition merges the
-    # x/y verify-side repartitions INTO the inner doc_id repartition,
-    # leaving three subtly different subtrees: the stage probe showed
+    # Materialized once: sharing the repartition exchange via
+    # ReusedExchange was not enough, because CollapseRepartition merges
+    # the x/y verify-side repartitions INTO the inner doc_id repartition,
+    # leaving three subtly different subtrees (the stage probe showed
     # THREE scan+shingle evaluations, two of them welded to the 4-file
-    # scan (4-task stages of 7.9 s and 7.6 s task time — the exact
-    # straggler the r8 widening was meant to fix). The checkpoint is a
-    # hard barrier: the shingle projection runs ONCE at `par`-way
-    # parallelism into per-run blocks (fresh RDD per build — nothing
-    # crosses bench runs), and every consumer reads the blocks.
-    sh = _shingled(
-        table(spark, sf_dir, "documents").repartition(par, "doc_id")
-    ).localCheckpoint(eager=False)
+    # scan). Behind the checkpoint the shingle projection runs ONCE at
+    # `par`-way parallelism, and every consumer reads the blocks. The
+    # repartition stays below _shingled, so that work is not welded to
+    # the scan.
+    sh = materialize_once(
+        _shingled(table(spark, sf_dir, "documents").repartition(par, "doc_id"))
+    )
     tok = sh.select(
         "doc_id", F.size("shingles").alias("n"), F.explode("shingles").alias("s")
     )
@@ -2919,7 +2904,6 @@ SELECT (SELECT COUNT(*) FROM truth) AS n_truth,
     "text_lsh_recall_audit",
     oracle=_lsh_recall_oracle(),
     tags=("text", "dedup", "lsh", "audit", "recall"),
-    rebuild_per_run=True,
 )
 def text_lsh_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Candidate-recall audit of the MinHash-LSH dedup path: on a

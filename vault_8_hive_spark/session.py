@@ -11,7 +11,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def _cpus() -> int:
@@ -90,3 +90,25 @@ def prep(spark: SparkSession) -> SparkSession:
     if spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false") != "true":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     return spark
+
+
+def materialize_once(df: DataFrame, *keys, n: int | None = None) -> DataFrame:
+    """`df` materialized once per execution, hash-partitioned on `keys`
+    (into `n` partitions, else the session default) when any are given.
+
+    The engine's one per-run materialization point:
+    - the checkpoint is lazy, so it materializes inside the caller's
+      action (no extra driver round-trip, no work at build time);
+    - it is a barrier no optimizer rule crosses, so every consumer reads
+      the same blocks and the input is evaluated once, however the
+      consumers are projected or filtered;
+    - it is not persist(): a CacheManager entry would match the canonical
+      plan of every later fresh build of the same query and serve it the
+      first build's blocks, whereas each build here derives a fresh RDD
+      and recomputes;
+    - its blocks are released with the DataFrame (ContextCleaner), so no
+      release scope is needed.
+    """
+    if keys:
+        df = df.repartition(n, *keys) if n else df.repartition(*keys)
+    return df.localCheckpoint(eager=False)
